@@ -7,11 +7,15 @@ and applies per-row writes as unbounded fire-and-forget promises
 
 The Spark versions fix both ends:
 
-- **source**: a driver-side paginated fetch materialized through
-  ``spark.createDataFrame`` with an explicit schema (dimension tables are
-  small — projects/categories — so a driver fetch then broadcast-sized
-  DataFrame is the right topology; a huge source would instead shard page
-  ranges across ``mapInPandas`` workers);
+- **source**: a driver-side paginated fetch built into a ``pyarrow``
+  table with the explicit schema and handed to ``spark.createDataFrame``
+  as an Arrow local relation: the rows live in the JVM as a
+  ``LocalTableScan``, so scanning the table launches no Python worker
+  (a list of dicts would become a Python RDD scan, re-run by every
+  consumer).  Dimension tables are small — projects/categories — so a
+  driver fetch then broadcast-sized DataFrame is the right topology; a
+  huge source would instead shard page ranges across ``mapInPandas``
+  workers;
 - **sink**: ``foreachPartition`` writers with *bounded* per-partition
   concurrency and idempotency keys, so retries can't double-apply and a
   slow endpoint backpressures the job instead of ballooning memory.
@@ -92,8 +96,15 @@ def fetch_paginated(
 
     The reference receives stringly-typed ids and ``parseInt``s them at
     every use site (``:158``, ``:179``, ``:298`` …); here the coercion
-    happens once at the boundary (``id_coerce``).
+    happens once at the boundary (``id_coerce``).  Keys the schema does
+    not name are ignored, at any depth.  A non-numeric id raises
+    ``ValueError``; a null in a non-nullable field raises ``ValueError``
+    (Spark's cast to the schema); a value of the wrong type raises an
+    Arrow error.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     rows: list[dict] = []
     page = 0
     while True:
@@ -112,9 +123,8 @@ def fetch_paginated(
             # dataset after page 0.  Cost: one extra empty request.
             break
         page += 1
-    return spark.createDataFrame(rows, schema=schema) if rows else (
-        spark.createDataFrame([], schema=schema)
-    )
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def foreach_partition_writer(

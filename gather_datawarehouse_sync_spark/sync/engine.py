@@ -1,14 +1,25 @@
 """The sync engine — the reference's top-level capability, re-expressed
-as one lazy DataFrame DAG per sync.
+as one DataFrame plan per sync, executed once.
 
 ``syncFilesystem`` (``src/DataWarehouse.js:67-258``) walks rows one at a
 time through nine imperative steps; here the same semantics are a
 *plan*: dedup → cascading match → orphan second-chance → action
 classification, all declarative, so Catalyst fuses the steps and the
-whole sync is a handful of shuffles regardless of row count.  The action
-DataFrame is data — auditable, countable, retryable — and the sink
-applies it in bulk with bounded concurrency (the reference fires
-unbounded per-row RPCs, ``:238-244``).
+whole sync is a handful of shuffles regardless of row count.
+
+:func:`plan_filesystem_sync` runs that plan once and returns the action
+table materialized as a local checkpoint.  The action table is data —
+auditable, countable, retryable: :func:`sync_report` aggregates the
+snapshot and :func:`apply_file_actions` scans it, so both describe the
+same actions even if the tree changes between the two calls, and a
+retried sink task replays the same rows instead of re-planning against
+a re-scanned tree.  The sink applies it in bulk with bounded concurrency
+(the reference fires unbounded per-row RPCs, ``:238-244``).
+
+The checkpoint's blocks live in executor storage.  Spark's context
+cleaner releases them once the caller drops the DataFrame and the JVM
+collects it.  The lineage above the snapshot is cut, so a lost executor
+fails the sync (its blocks are gone) rather than silently re-planning.
 
 Action vocabulary (SURVEY §2.11):
 
@@ -16,8 +27,10 @@ Action vocabulary (SURVEY §2.11):
   duplicate alias (step-8 semantics, ``:211-221``)
 - ``update``  — matched but path/md5 differ (ref ``:260-291``; unlike the
   reference, the *new* md5 is what lands — SURVEY §7 watch-list)
-- ``keep``    — matched and identical
-- ``archive`` — project with no file (soft delete, ref ``:198-201``)
+- ``keep``    — matched and identical, or already archived with no file
+- ``archive`` — live project with no file (soft delete, ref ``:198-201``)
+
+A sync over the state its own actions produced plans only ``keep`` rows.
 """
 
 from __future__ import annotations
@@ -25,7 +38,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gather_datawarehouse_sync_spark.operators.dedup import mark_duplicates
@@ -52,6 +65,14 @@ def _flatten_projects(projects: DataFrame) -> DataFrame:
         F.col("id").alias("project_id"),
         F.col("metadata.file.file").alias("p_file"),
         F.col("metadata.file.md5").alias("p_md5"),
+        F.coalesce(F.col("archived"), F.lit(False)).alias("p_archived"),
+    )
+
+
+def _drifted(file: str, md5: str) -> Column:
+    """The project's recorded path or md5 differs from the file's."""
+    return ~F.col("p_file").eqNullSafe(F.col(file)) | ~F.col("p_md5").eqNullSafe(
+        F.col(md5)
     )
 
 
@@ -69,7 +90,8 @@ def plan_filesystem_sync(
 
     Returns one DataFrame, one row per file *or* orphaned project:
     ``(action, match, file, md5, size, ino, alias, project_id, p_file,
-    p_md5)``.
+    p_md5)``, executed once here and returned as a local checkpoint
+    (see the module docstring); every project lands in exactly one row.
 
     Mirrors ``syncFilesystem``'s nine steps (SURVEY §3.2) with the
     documented deterministic deviations: canonical duplicate = min path;
@@ -144,17 +166,15 @@ def plan_filesystem_sync(
     main_actions = matched.withColumn(
         "action",
         F.when(F.col("match") == "none", F.lit("insert"))  # J4 (ref :162-165)
-        .when(
-            ~F.col("p_file").eqNullSafe(F.col("file"))
-            | ~F.col("p_md5").eqNullSafe(F.col("md5")),
-            F.lit("update"),
-        )
+        .when(_drifted("file", "md5"), F.lit("update"))
         .otherwise(F.lit("keep")),
     )
 
     # J5 orphan pass (ref :178-203): projects no main claimed get a
-    # second chance against the *alias* files (md5 only — the alias set
-    # shares content with its canonical, the path tier can't apply)
+    # second chance against the *alias* files, matched on md5 (the alias
+    # set shares content with its canonical); among an orphan's
+    # candidates the alias at its recorded path comes first, so orphans
+    # already tracking different copies of one content keep them
     processed = main_actions.filter(F.col("project_id").isNotNull()).select(
         F.col("project_id").alias("__pid")
     )
@@ -174,7 +194,7 @@ def plan_filesystem_sync(
             "left",
         ),
         ["project_id"],
-        ["a_ino"],
+        [(~F.col("a_file").eqNullSafe(F.col("p_file"))).cast("int"), F.col("a_ino")],
     )
     # one alias file can satisfy only one orphan (greedy→deterministic:
     # min project_id wins the alias); losers fall through to archive
@@ -189,8 +209,12 @@ def plan_filesystem_sync(
         "left_anti",
     )
 
+    # a winner already recording the alias's path and md5 (the state a
+    # previous sync's update left) keeps; an already-archived loser keeps
     orphan_actions = winners.select(
-        F.lit("update").alias("action"),
+        F.when(_drifted("a_file", "a_md5"), F.lit("update"))
+        .otherwise(F.lit("keep"))
+        .alias("action"),
         F.lit(MD5_MATCH).alias("match"),
         F.col("a_file").alias("file"),
         F.col("a_md5").alias("md5"),
@@ -202,7 +226,9 @@ def plan_filesystem_sync(
         "p_md5",
     ).unionByName(
         losers.select(
-            F.lit("archive").alias("action"),
+            F.when(F.col("p_archived"), F.lit("keep"))
+            .otherwise(F.lit("archive"))
+            .alias("action"),
             F.lit("none").alias("match"),
             F.lit(None).cast("string").alias("file"),
             F.lit(None).cast("string").alias("md5"),
@@ -250,6 +276,7 @@ def plan_filesystem_sync(
         main_actions.select(*cols)
         .unionByName(orphan_actions.select(*cols))
         .unionByName(leftover.select(*cols))
+        .localCheckpoint(eager=True)
     )
 
 
@@ -284,7 +311,7 @@ def plan_category_sync(
 
 def sync_report(actions: DataFrame) -> dict[str, int]:
     """The reference's end-of-run counters (``found/missing/updates``,
-    ref ``:230``) from one aggregation over the action plan — the SAME
+    ref ``:230``) from one aggregation over the action snapshot — the SAME
     aggregation as :func:`...operators.reconcile.action_counts`
     (reused, not re-spelled, so the report column/vocabulary cannot
     drift between the two surfaces)."""

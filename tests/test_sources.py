@@ -54,22 +54,42 @@ def test_scan_files_streaming_plan_builds(spark, tree):
     assert set(sdf.columns) == {"file", "md5", "size", "ino"}
 
 
-def test_fetch_paginated_coerces_ids(spark):
-    pages = [
-        [{"id": str(i), "metadata": None, "archived": False} for i in range(2)],
-        [{"id": "7", "metadata": {"iam": "x", "file": None}, "archived": True}],
-    ]
-
+def _paged(pages):
     def transport(method, path, body):
         assert method == "GET"
         page = int(path.split("page=")[1].split("&")[0])
         return pages[page] if page < len(pages) else []
 
-    df = fetch_paginated(spark, transport, "/projects", PROJECT_SCHEMA, page_size=2)
+    return transport
+
+
+def test_fetch_paginated_coerces_ids(spark):
+    pages = [
+        [{"id": str(i), "metadata": None, "archived": False} for i in range(2)],
+        # keys the schema does not name are ignored, nested ones too
+        [{"id": "7", "metadata": {"iam": "x", "file": {"file": "f", "md5": "m", "size": 3},
+                                  "tags": ["t"]},
+          "archived": True, "owner": {"name": "n"}}],
+    ]
+    df = fetch_paginated(spark, _paged(pages), "/projects", PROJECT_SCHEMA, page_size=2)
     rows = {r["id"]: r for r in df.collect()}
     # stringly ids coerced once at the boundary (ref parseInt at :158 et al.)
     assert set(rows) == {0, 1, 7}
     assert rows[7]["metadata"]["iam"] == "x"
+    assert rows[7]["metadata"]["file"].asDict() == {"file": "f", "md5": "m"}
+    assert df.schema == PROJECT_SCHEMA
+    # an Arrow local relation in the JVM: scanning it starts no Python worker
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("bad_id", [None, "abc"])
+def test_fetch_paginated_refuses_bad_ids(spark, bad_id):
+    import pyarrow as pa
+
+    pages = [[{"id": "1", "metadata": None, "archived": False},
+              {"id": bad_id, "metadata": None, "archived": False}]]
+    with pytest.raises((ValueError, pa.ArrowInvalid)):
+        fetch_paginated(spark, _paged(pages), "/projects", PROJECT_SCHEMA).collect()
 
 
 def test_fetch_paginated_empty(spark):
@@ -482,11 +502,7 @@ def test_fetch_paginated_survives_server_clamped_pages(spark):
         [{"id": str(i), "metadata": None, "archived": False}] for i in range(5)
     ]  # server clamps every page to 1 row despite page_size=1000
 
-    def transport(method, path, body):
-        page = int(path.split("page=")[1].split("&")[0])
-        return pages[page] if page < len(pages) else []
-
-    df = fetch_paginated(spark, transport, "/projects", PROJECT_SCHEMA, page_size=1000)
+    df = fetch_paginated(spark, _paged(pages), "/projects", PROJECT_SCHEMA, page_size=1000)
     assert {r["id"] for r in df.collect()} == set(range(5))
 
 

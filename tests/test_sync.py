@@ -5,12 +5,16 @@ in-memory project tables and a fake REST transport.
 
 from __future__ import annotations
 
+import copy
+import hashlib
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from gather_datawarehouse_sync_spark.sources.rest import PROJECT_SCHEMA
+from gather_datawarehouse_sync_spark.sources.filescan import scan_files
+from gather_datawarehouse_sync_spark.sources.rest import PROJECT_SCHEMA, fetch_paginated
 from gather_datawarehouse_sync_spark.sync import (
     apply_file_actions,
     plan_category_sync,
@@ -23,20 +27,24 @@ def _files(spark, rows):
     return spark.createDataFrame(rows, "file string, md5 string, size long, ino long")
 
 
-def _projects(spark, rows):
-    """rows: (id, file, md5) with file=None → project without metadata.file"""
-    data = [
+def _project_dicts(rows):
+    """rows: (id, file, md5[, archived]) with file=None → project without
+    metadata.file; the JSON shape the project API serves"""
+    return [
         {
             "id": pid,
             "metadata": {
                 "iam": "gatherbot",
                 "file": None if f is None else {"file": f, "md5": m},
             },
-            "archived": False,
+            "archived": bool(archived and archived[0]),
         }
-        for pid, f, m in rows
+        for pid, f, m, *archived in rows
     ]
-    return spark.createDataFrame(data, PROJECT_SCHEMA)
+
+
+def _projects(spark, rows):
+    return spark.createDataFrame(_project_dicts(rows), PROJECT_SCHEMA)
 
 
 def _plan(spark, files, projects):
@@ -151,23 +159,45 @@ def test_projects_without_file_metadata_ignored(spark):
     assert "p10" not in out  # not archived either — it was never considered
 
 
-def test_apply_file_actions_requests(spark, tmp_path):
-    log = tmp_path / "rpc.jsonl"
-    log_path = str(log)
-    actions = plan_filesystem_sync(
-        _files(spark, [("a/new.shp", "m9", 1, 1), ("b/same.shp", "m2", 1, 2)]),
-        _projects(spark, [(10, "b/same.shp", "m2"), (30, "dead.shp", "zz")]),
-    )
+def _recording_transport(log_path):
+    """Sink transport factory appending every request to a JSONL log
+    (the writers run in Python workers, so the log is a file)."""
 
-    def transport_factory():
+    def factory():
         def transport(method, path, body):
             with open(log_path, "a") as fh:
                 fh.write(json.dumps({"m": method, "p": path, "b": body}) + "\n")
 
         return transport
 
-    apply_file_actions(actions, transport_factory)
-    calls = [json.loads(l) for l in log.read_text().splitlines()]
+    return factory
+
+
+def _calls(log):
+    return [json.loads(l) for l in log.read_text().splitlines()] if log.exists() else []
+
+
+def _route(call):
+    """``(action, project_id)`` of one recorded sink request."""
+    parts = call["p"].split("?")[0].strip("/").split("/")
+    if parts == ["projects"]:
+        return "insert", None
+    return ("archive" if parts[-1] == "archive" else "update"), int(parts[1])
+
+
+def _sent_actions(calls):
+    """Sink requests counted per action, keyed like ``sync_report``."""
+    return dict(Counter(_route(c)[0] for c in calls))
+
+
+def test_apply_file_actions_requests(spark, tmp_path):
+    log = tmp_path / "rpc.jsonl"
+    actions = plan_filesystem_sync(
+        _files(spark, [("a/new.shp", "m9", 1, 1), ("b/same.shp", "m2", 1, 2)]),
+        _projects(spark, [(10, "b/same.shp", "m2"), (30, "dead.shp", "zz")]),
+    )
+    apply_file_actions(actions, _recording_transport(str(log)))
+    calls = _calls(log)
     by_method = {}
     for c in calls:
         # strip the idempotency key (a query param since r16 — a #fragment
@@ -226,3 +256,137 @@ def test_demoted_main_carries_no_stale_project_columns(spark):
     assert demoted["action"] == "insert" and demoted["match"] == "none"
     assert demoted["project_id"] is None
     assert demoted["p_file"] is None and demoted["p_md5"] is None
+
+
+def test_orphan_winner_recording_alias_keeps(spark):
+    """The state a second-chance update leaves behind — the orphan
+    project already records the alias's path and md5 — is a keep, so a
+    resync sends no no-op write for it."""
+    out = _plan(
+        spark,
+        [("a/orig.shp", "m1", 5, 1), ("b/copy.shp", "m1", 5, 2)],
+        [(10, "a/orig.shp", "m1"), (20, "b/copy.shp", "m1")],
+    )
+    assert out[2]["action"] == "keep" and out[2]["project_id"] == 20
+    assert out[2]["match"] == "md5Match"
+
+
+def test_archived_project_without_file_keeps(spark):
+    # a live project whose file is gone archives; one already archived
+    # keeps, and each lands in exactly one row
+    rows = plan_filesystem_sync(
+        _files(spark, []),
+        _projects(spark, [(10, "gone.shp", "m1")]),
+        _projects(spark, [(11, "long-gone.shp", "m2", True)]),
+    ).collect()
+    assert sorted((r["project_id"], r["action"]) for r in rows) == [
+        (10, "archive"),
+        (11, "keep"),
+    ]
+
+
+def test_report_and_apply_share_one_snapshot(spark, tmp_path):
+    """The plan runs once: a file deleted after planning changes neither
+    the report nor the requests, which match the report's counts; the
+    report then runs at most 2 Spark jobs and the sink 1."""
+    tree = tmp_path / "tree"
+    tree.mkdir()
+    for name, data in [("new.shp", b"n"), ("same.shp", b"s"), ("late.shp", b"l")]:
+        (tree / name).write_bytes(data)
+    same_md5 = hashlib.md5(b"s").hexdigest()
+    actions = plan_filesystem_sync(
+        scan_files(spark, str(tree)),
+        _projects(spark, [(10, "same.shp", same_md5), (30, "dead.shp", "zz")]),
+    )
+    (tree / "late.shp").unlink()
+
+    sc = spark.sparkContext
+    log = tmp_path / "rpc.jsonl"
+    try:
+        sc.setJobGroup("test-sync-report", "sync_report over the snapshot")
+        report = sync_report(actions)
+        sc.setJobGroup("test-sync-apply", "apply_file_actions over the snapshot")
+        apply_file_actions(actions, _recording_transport(str(log)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert report == {"insert": 2, "keep": 1, "archive": 1}
+    assert _sent_actions(_calls(log)) == {"insert": 2, "archive": 1}
+    tracker = sc.statusTracker()
+    assert 1 <= len(tracker.getJobIdsForGroup("test-sync-report")) <= 2
+    assert len(tracker.getJobIdsForGroup("test-sync-apply")) == 1
+
+
+def _applied_state(projects, calls):
+    """The warehouse after the sink's requests, replayed in order onto
+    the initial project dicts (insert ids continue from the max)."""
+    state = {p["id"]: copy.deepcopy(p) for p in projects}
+    next_id = max(state, default=0) + 1
+    for c in calls:
+        action, pid = _route(c)
+        if action == "insert":
+            state[next_id] = {"id": next_id, "metadata": c["b"]["metadata"], "archived": False}
+            next_id += 1
+        elif action == "archive":
+            state[pid]["archived"] = True
+        else:
+            state[pid]["metadata"]["file"] = c["b"]["metadata"]["file"]
+    return list(state.values())
+
+
+def _fetch(spark, rows):
+    """The project table through the REST source, served as one page."""
+
+    def transport(method, path, body):
+        return rows if "page=0&" in path else []
+
+    return fetch_paginated(spark, transport, "/projects", PROJECT_SCHEMA)
+
+
+def test_resync_over_applied_state_writes_nothing(spark, tmp_path):
+    """ROADMAP item 2's "done": a churn sync covering every action kind,
+    applied through a recording transport, then a resync against the
+    applied state plans only keep rows."""
+    files = _files(
+        spark,
+        [
+            ("keep.shp", "mk", 1, 1),
+            ("renamed.shp", "mr", 1, 2),  # project 11 recorded old.shp
+            ("content.shp", "NEW", 1, 3),  # project 12 recorded OLD
+            ("new.shp", "mn", 1, 4),
+            ("a/orig.shp", "md", 1, 5),  # canonical of a duplicate pair
+            ("b/copy.shp", "md", 1, 6),  # alias; orphan 14 claims it
+            ("c/copy.shp", "md", 1, 7),  # alias nobody claims → insert;
+            # on the resync its new project must take this copy, not 6
+        ],
+    )
+    initial = _project_dicts(
+        [
+            (10, "keep.shp", "mk"),
+            (11, "old.shp", "mr"),
+            (12, "content.shp", "OLD"),
+            (13, "a/orig.shp", "md"),
+            (14, "b/old-copy.shp", "md"),
+            (15, "deleted.shp", "mx"),
+            (16, "gone.shp", "mg", True),
+            (17, None, None),
+        ]
+    )
+
+    def sync(projects, log):
+        active = _fetch(spark, [p for p in projects if not p["archived"]])
+        archived = _fetch(spark, [p for p in projects if p["archived"]])
+        actions = plan_filesystem_sync(files, active, archived)
+        pids = [r["project_id"] for r in actions.collect() if r["project_id"] is not None]
+        # every project carrying a file lands in exactly one row
+        assert sorted(pids) == sorted(p["id"] for p in projects if p["metadata"]["file"])
+        apply_file_actions(actions, _recording_transport(str(log)))
+        return sync_report(actions), _calls(log)
+
+    churn, churn_calls = sync(initial, tmp_path / "churn.jsonl")
+    assert churn == {"keep": 3, "update": 3, "insert": 2, "archive": 1}
+    assert _sent_actions(churn_calls) == {"update": 3, "insert": 2, "archive": 1}
+
+    applied = _applied_state(initial, churn_calls)
+    resync, resync_calls = sync(applied, tmp_path / "resync.jsonl")
+    assert resync == {"keep": 9}  # 7 files + archived 15 and 16
+    assert resync_calls == []
